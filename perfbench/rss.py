@@ -4,6 +4,11 @@ A daemon thread samples ``/proc`` every 0.2 s and sums the resident set
 of every descendant of this process: the JVM that ``spark-submit``
 starts, the ``pyspark.daemon`` it forks and the workers forked from that.
 The benchmark's own driver process (inputs, oracle) is excluded.
+
+A process younger than ``MIN_AGE_S`` is left out of a sample: a child
+the JVM spawns shares the JVM's memory until it execs, so a sample that
+catches one would count the JVM twice. A long-lived process is counted
+from its next sample on.
 """
 
 from __future__ import annotations
@@ -12,10 +17,17 @@ import os
 import threading
 
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+_TICK = os.sysconf("SC_CLK_TCK")
+MIN_AGE_S = 0.5
 
 
-def _children_map() -> dict[int, list[int]]:
+def _children_map() -> tuple[dict[int, list[int]], set[int]]:
+    """Children of every process, and the processes younger than
+    ``MIN_AGE_S``."""
+    with open("/proc/uptime") as f:
+        now = float(f.read().split()[0])
     kids: dict[int, list[int]] = {}
+    young: set[int] = set()
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
@@ -24,10 +36,13 @@ def _children_map() -> dict[int, list[int]]:
                 stat = f.read()
         except OSError:  # exited between listdir and open
             continue
-        # field 4 (ppid) follows the parenthesised command name
-        ppid = int(stat.rsplit(")", 1)[1].split()[1])
-        kids.setdefault(ppid, []).append(int(name))
-    return kids
+        # fields after the parenthesised command name: state (3), ppid
+        # (4), ..., starttime (22) in clock ticks since boot
+        fields = stat.rsplit(")", 1)[1].split()
+        kids.setdefault(int(fields[1]), []).append(int(name))
+        if now - int(fields[19]) / _TICK < MIN_AGE_S:
+            young.add(int(name))
+    return kids, young
 
 
 def _rss_bytes(pid: int) -> int:
@@ -39,11 +54,12 @@ def _rss_bytes(pid: int) -> int:
 
 
 def descendants_rss() -> int:
-    kids = _children_map()
+    kids, young = _children_map()
     total, todo = 0, list(kids.get(os.getpid(), []))
     while todo:
         pid = todo.pop()
-        total += _rss_bytes(pid)
+        if pid not in young:
+            total += _rss_bytes(pid)
         todo.extend(kids.get(pid, []))
     return total
 

@@ -106,9 +106,9 @@ def _trace_report(tracer, out, metrics: dict) -> str:
             s = sum(own[sp["id"]] for sp in sps) / n
             lines.append(f"{name:<38} {s:>10.3f} {len(sps) / n:>9.1f}")
     steps = [sp for sp in tracer.spans if sp["name"] == "engine.step"]
-    if steps and out.reference_round_s:
+    if steps and out.untraced_round_s:
         traced_round = sum(sp["end"] - sp["start"] for sp in steps) / len(steps)
-        plain_round = statistics.median(out.reference_round_s)
+        plain_round = statistics.median(out.untraced_round_s)
         lines.append(
             f"round accounting: engine.step self + layer self times = "
             f"{traced_round:.3f} s/round traced; warm untraced round = "
@@ -172,7 +172,7 @@ def main(argv=None) -> int:
         metrics["engine.jobs_per_round"] = statistics.mean(ctx.round_jobs)
         metrics["catalog.snapshot_dirs"] = out.notes["snapshot_dirs"]
         traced = statistics.median(out.traced_op_s)
-        untraced = statistics.median(out.reference_op_s)
+        untraced = statistics.median(out.untraced_op_s)
         metrics["trace.overhead_s"] = traced - untraced
         metrics["trace.overhead_ratio"] = traced / untraced - 1
         path = os.path.join(WORK, f"trace_{args.workload}_{args.seed}.json")

@@ -1,10 +1,10 @@
 """The benchmark's workloads: one closed-loop client each.
 
 ``historical_crawl``
-    Throughput mode, as a batch backfill job runs it: a cold engine. The
-    seed list goes through ``CrawlEngine.ingest``, then ``step`` runs to
-    quiescence under per-host budgets wide enough to pop every admitted
-    URL in the first round. The list holds only pages the synthetic
+    Throughput mode, as a batch backfill job runs it. The seed list goes
+    through ``CrawlEngine.ingest``, then ``step`` runs to quiescence
+    under per-host budgets wide enough to pop every admitted URL in the
+    first round. The list holds only pages the synthetic
     network serves, so that round is the whole crawl (fetch failures and
     retries are exercised by ``fresh_cycle``). Crawls of the same seed
     list repeat, each in a fresh catalog, for the measuring window.
@@ -15,10 +15,13 @@
     previous window, half new) through ``ingest_incremental`` and then
     runs one ``step`` at a tight per-host budget.
 
-No warm-up runs before the first timed operation: on this benchmark's
-budget one run holds a single Spark session and little more, so the
-first operation also pays plan compilation, as a freshly started crawl
-job does.
+Each workload warms up in set-up, untimed by the operation metrics:
+the first crawl or cycle of a Spark session pays plan compilation, JIT
+and worker start-up and ran 1.4-2x slower than the ones after it, which
+made single-run figures swing with how much of that cost a run hit.
+``historical_crawl`` crawls a small slice of its seed list in a
+throwaway catalog; ``fresh_cycle`` runs its first poll + round cycle
+on the live engine. The warm-up is billed to ``setup_s``.
 
 Both call only public engine entry points and pass only workload inputs
 (seed lists, poll batches, politeness tables), never engine
@@ -46,13 +49,19 @@ SETUP_REPS = 3
 
 # historical_crawl: ~1.7k URLs admitted, all popped and fetched in round one
 HIST_SEEDS = 2000
+HIST_WARMUP_SEEDS = 200  # the slice of the list crawled in set-up
 
 # fresh_cycle: base frontier, poll size and the tight per-host budget
 FRESH_BASE = 3000
 FRESH_POLL_HALF = 500
 FRESH_REFILL = 100
-STATE_AFTER_CYCLES = 1  # fresh_cycle reads state_mb after this many cycles
-FRESH_MIN_CYCLE_S = 5.0  # sizes the pre-generated poll supply
+STATE_AFTER_CYCLES = 1  # fresh_cycle reads state_mb after this many timed cycles
+
+# The window holds as many whole timed ops as fit in --seconds at the
+# nominal warm op time on a 4-core machine. A fixed count, not one that
+# follows the wall clock: runs on a slower host would otherwise time
+# fewer ops, and the engine's periodic work falls on fixed rounds.
+NOMINAL_OP_S = {"historical_crawl": 12.0, "fresh_cycle": 11.0}
 
 
 @dataclass
@@ -74,9 +83,7 @@ class Outcome:
     metrics: dict = field(default_factory=dict)
     traced_op_s: list = field(default_factory=list)
     untraced_op_s: list = field(default_factory=list)
-    # warm untraced ops (and their rounds): what traced ops compare with
-    reference_op_s: list = field(default_factory=list)
-    reference_round_s: list = field(default_factory=list)
+    untraced_round_s: list = field(default_factory=list)
     catalog_root: str = ""
     notes: dict = field(default_factory=dict)
 
@@ -102,10 +109,11 @@ def _timed(ctx: Ctx, kind: str, fn, traced: bool = False):
     return dt, out
 
 
-def _min_ops(ctx: Ctx) -> int:
-    """A traced run needs a traced op and a warm untraced one to compare
-    it with, after the cold first op."""
-    return 3 if ctx.tracer else 1
+def _n_ops(ctx: Ctx, workload: str) -> int:
+    """Timed ops in the window. A traced run needs a traced op and an
+    untraced one to compare it with (both after the warm-up)."""
+    n = max(1, int(ctx.seconds / NOMINAL_OP_S[workload]))
+    return max(n, 2) if ctx.tracer else n
 
 
 def _is_traced(ctx: Ctx, k: int) -> bool:
@@ -151,13 +159,21 @@ def historical_crawl(ctx: Ctx) -> Outcome:
         seeds = inputs.read(spark, path)
         build.append(time.perf_counter() - t0)
     pol = _politeness(spark, refill)
-    out.notes["setup_parts_s"] = {"inputs": build}
-    setup_s = statistics.median(build)
+    t0 = time.perf_counter()
+    warm = os.path.join(ctx.work, "seeds_warmup")
+    inputs.write_parquet(rows[:HIST_WARMUP_SEEDS], warm, ctx.cores)
+    w_eng = CrawlEngine(spark, os.path.join(ctx.work, "crawl_warmup"), politeness=pol)
+    w_eng.ingest(inputs.read(spark, warm))
+    rnd = 1
+    while (st := w_eng.step(rnd)).popped and st.pending_left:
+        rnd += 1
+    warmup_s = time.perf_counter() - t0
+    out.notes["setup_parts_s"] = {"inputs": build, "warmup": warmup_s}
+    setup_s = statistics.median(build) + warmup_s
 
     # ---- timed: crawls of the same seed list for the window
     crawls = []  # (ingest_s, [(round_s, RoundStats)], engine)
-    measured, k = 0.0, 0
-    while k < _min_ops(ctx) or measured < ctx.seconds:
+    for k in range(_n_ops(ctx, "historical_crawl")):
         traced = _is_traced(ctx, k)
         wd = os.path.join(ctx.work, f"crawl_{k}")
         eng = CrawlEngine(spark, wd, politeness=pol)
@@ -170,12 +186,9 @@ def historical_crawl(ctx: Ctx) -> Outcome:
             out.attempted += len(rounds)
         crawl_s = ingest_s + sum(dt for dt, _ in rounds)
         (out.traced_op_s if traced else out.untraced_op_s).append(crawl_s)
-        if not traced and k > 0:
-            out.reference_op_s.append(crawl_s)
-            out.reference_round_s += [dt for dt, _ in rounds]
-        measured += crawl_s
+        if not traced:
+            out.untraced_round_s += [dt for dt, _ in rounds]
         crawls.append((ingest_s, rounds, eng))
-        k += 1
 
     # ---- checks (untimed): pops, lineage and seen set against the oracle
     t0 = time.perf_counter()
@@ -232,7 +245,9 @@ def historical_crawl(ctx: Ctx) -> Outcome:
 # --------------------------------------------------------------------- fresh
 def fresh_cycle(ctx: Ctx) -> Outcome:
     spark, out = ctx.spark, Outcome()
-    n_polls = max(_min_ops(ctx), 1 + int(ctx.seconds / FRESH_MIN_CYCLE_S))
+    # the warm-up cycle's poll, then the supply for the timed window
+    n_cycles = _n_ops(ctx, "fresh_cycle")
+    n_polls = 1 + n_cycles
 
     # ---- set-up: inputs (median of reps) and the base frontier
     build = []
@@ -252,16 +267,21 @@ def fresh_cycle(ctx: Ctx) -> Outcome:
     t0 = time.perf_counter()
     eng.ingest(base)
     base_s = time.perf_counter() - t0
-    out.notes["setup_parts_s"] = {"inputs": build, "base_ingest": base_s}
-    setup_s = statistics.median(build) + base_s
+    # warm-up: the first poll + round cycle; its outputs are checked too
+    t0 = time.perf_counter()
+    admitted = [eng.ingest_incremental(poll_dfs[0])]
+    stats = [eng.step(eng.catalog.latest_round() + 1)]
+    out.attempted += 2
+    warmup_s = time.perf_counter() - t0
+    out.notes["setup_parts_s"] = {"inputs": build, "base_ingest": base_s, "warmup": warmup_s}
+    setup_s = statistics.median(build) + base_s + warmup_s
 
     # ---- timed: poll + round cycles for the window
-    admitted, stats, admits, rounds_t, u_fetched = [], [], [], [], 0
+    admits, rounds_t, u_fetched = [], out.untraced_round_s, 0
     state_bytes = None
-    measured, k = 0.0, 0
-    while (k < _min_ops(ctx) or measured < ctx.seconds) and k < n_polls:
+    for k in range(n_cycles):
         traced = _is_traced(ctx, k)
-        poll = poll_dfs[k]
+        poll = poll_dfs[1 + k]
         out.attempted += 2
         a_s, n_new = _timed(ctx, "admit", lambda p=poll: eng.ingest_incremental(p), traced)
         admitted.append(n_new)
@@ -273,12 +293,7 @@ def fresh_cycle(ctx: Ctx) -> Outcome:
             admits.append(a_s)
             rounds_t.append(r_s)
             u_fetched += st.fetched_ok + st.fetched_fail
-            if k > 0:
-                out.reference_op_s.append(a_s + r_s)
-                out.reference_round_s.append(r_s)
-        measured += a_s + r_s
-        k += 1
-        if k == STATE_AFTER_CYCLES:
+        if k + 1 == STATE_AFTER_CYCLES:
             state_bytes = dir_bytes(eng.catalog.root)
 
     # ---- checks (untimed): every poll's admitted rows against the oracle
@@ -334,7 +349,7 @@ def fresh_cycle(ctx: Ctx) -> Outcome:
     }
     out.catalog_root = eng.catalog.root
     out.notes.update(
-        cycles=k, admitted_per_poll=admitted, admit_s=admits, round_s=rounds_t,
+        cycles=n_cycles, admitted_per_poll=admitted, admit_s=admits, round_s=rounds_t,
         popped_per_round=[st.popped for st in stats],
     )
     return out
